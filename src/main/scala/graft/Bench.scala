@@ -1,27 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Queries whose iter1 lands below this get no second iteration. */
   private val Iter2MinSec = 0.25
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // iterative graph queries reliably checkpoint per-round state; clean
-      // each query's checkpoint files once its RDDs are GC'd so a 300-query
-      // bench run doesn't accrete them in tmp
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Warm-up: JIT the scan/codegen path once so the first timed query isn't
     // charged JVM startup (standard practice; every query still pays its own
     // planning + execution).

@@ -56,11 +56,12 @@ object GraphRank {
       val dir = new org.apache.hadoop.fs.Path(
         System.getProperty("java.io.tmpdir"), s"graft-ckpt-${sc.applicationId}")
       sc.setCheckpointDir(dir.toString)
-      // Every session type (Verify, tests, Plans, QBench — not just Bench,
-      // which also sets cleaner.referenceTracking.cleanCheckpoints) must
-      // reclaim its edge-scale checkpoint files: the dir is per-appId, so a
-      // JVM-exit hook deleting it leaks nothing across sessions and races
-      // nothing within one (checkpoints are only read while the JVM lives).
+      // GraftSession's cleaner.referenceTracking.cleanCheckpoints reclaims a
+      // checkpoint only once its RDD is GC'd; whatever is still live at
+      // exit (and any session built elsewhere) goes with the dir. The dir
+      // is per-appId, so a JVM-exit hook deleting it leaks nothing across
+      // sessions and races nothing within one (checkpoints are only read
+      // while the JVM lives).
       sys.addShutdownHook {
         try dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
           .delete(dir, true)

@@ -19,6 +19,8 @@ object Tables {
     * only — the cache holds a StructType, never rows; every query still
     * reads its data in full (the production analogue is a metastore
     * schema, which Spark also trusts without re-sniffing footers).
+    * The key carries no length or mtime: this relies on corpus files never
+    * changing while the JVM runs (a per-load stat would cost every read).
     */
   private val schemaCache = scala.collection.concurrent.TrieMap
     .empty[(String, String), org.apache.spark.sql.types.StructType]

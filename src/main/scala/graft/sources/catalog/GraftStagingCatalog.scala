@@ -3177,19 +3177,8 @@ object GraftStagingCatalog {
             df = df.sortWithinPartitions(
               so.map(org.apache.spark.sql.functions.col): _*)
         }
-        val token = java.util.UUID.randomUUID().toString.take(12)
-        val tmp = new Path(d, s"_rename_$token")
-        df.write.mode("overwrite").parquet(tmp.toString)
-        val moved = fs.listStatus(tmp).toIndexedSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map { f =>
-            val target = new Path(d, s"ren-$token-${f.getPath.getName}")
-            if (!fs.rename(f.getPath, target))
-              throw new IllegalStateException(s"rename: move ${f.getPath} -> $target failed")
-            target.getName
-          }
-        fs.delete(tmp, true)
-        moved
+        Staging.landParts(fs, d, "rename", df)(p => s"ren-${p.token}-${p.name}")
+          .flatMap(_._2)
       }
     writeExplicitManifest(fs, d, kept, kind = "rename", expectedBase = Some(base))
   }
@@ -4180,19 +4169,8 @@ object GraftStagingCatalog {
           if (soCols.isEmpty) remaining0
           else remaining0.sortWithinPartitions(
             soCols.map(org.apache.spark.sql.functions.col): _*)
-        val token = java.util.UUID.randomUUID().toString.take(12)
-        val tmp = new Path(d, s"_delete_$token")
-        remaining.write.mode("overwrite").parquet(tmp.toString)
-        val moved = fs.listStatus(tmp).toIndexedSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map { f =>
-            val target = new Path(d, s"del-$token-${f.getPath.getName}")
-            if (!fs.rename(f.getPath, target))
-              throw new IllegalStateException(s"delete: move ${f.getPath} -> $target failed")
-            target.getName
-          }
-        fs.delete(tmp, true)
-        untouched ++ moved
+        untouched ++ Staging.landParts(fs, d, "delete", remaining)(
+          p => s"del-${p.token}-${p.name}").flatMap(_._2)
       }
     ZoneMapScan.lastDeleteSplit = Some((untouched.size, dropped.size, touched.size))
     (kept, (kept.toSet -- untouched).toSet)

@@ -160,7 +160,7 @@ object StagingMaintenance {
 
   private[catalog] def foldDeltasAt(spark: SparkSession, fs: FileSystem,
       d: Path): (Int, Int, Long) = {
-    import org.apache.spark.sql.functions.{col, concat_ws, element_at, split, typedLit}
+    import org.apache.spark.sql.functions.{col, concat_ws, element_at, split}
     val latest = GraftStagingCatalog.headManifest(fs, d).getOrElse(
       throw new IllegalArgumentException(s"$d has no committed version"))
     val (base, mf) = latest
@@ -230,58 +230,10 @@ object StagingMaintenance {
       val i1 = full.lastIndexOf('/', i2 - 1)
       full.substring(i1 + 1)
     }
-    val pidOf: Map[String, Int] = covered.zipWithIndex.map { case (f, i) =>
-      pathKey(f) -> i }.toMap
-    require(pidOf.size == covered.size,
-      s"foldDeltas: covered dir/name keys are not unique (${covered.size} " +
-        s"files, ${pidOf.size} distinct keys)")
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val tmp = new Path(d, s"_fold_$token")
-    resolved
-      .withColumn("__graft_fpid", element_at(typedLit(pidOf), col("__graft_ff")))
-      .repartition(math.max(covered.size, 1), col("__graft_fpid"))
-      .sortWithinPartitions(col("__graft_fpid"), col("__graft_fr"))
-      .drop("__graft_ff", "__graft_fr", "_metadata")
-      .write.partitionBy("__graft_fpid").mode("overwrite").parquet(tmp.toString)
-    // place twins beside their originals (same partition directory: the
-    // path-based pruner must keep judging them by the same spec)
-    val repl = scala.collection.mutable.Map.empty[String, Seq[String]]
-    fs.listStatus(tmp).toIndexedSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__graft_fpid="))
-      .foreach { pd =>
-        val pid = pd.getPath.getName.stripPrefix("__graft_fpid=").toInt
-        val old = covered(pid)
-        val slash = old.lastIndexOf('/')
-        // a BORROWED file's twin materializes into the folding table's own
-        // root — never back into the source's directory
-        val dirPart =
-          if (TableClone.isForeign(old)) ""
-          else if (slash > 0) old.substring(0, slash + 1) else ""
-        // listStatus order is unspecified; sorted part names ARE row order
-        // (the writing task numbers them sequentially) — required for the
-        // preserved-row-order claim the sort-provenance carry rides
-        val parts = fs.listStatus(pd.getPath).toIndexedSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        repl(old) = parts.zipWithIndex.map { case (f, j) =>
-          val name = s"${dirPart}fold-$token-$pid-$j.parquet"
-          val target = new Path(d, name)
-          if (!fs.rename(f.getPath, target))
-            throw new IllegalStateException(s"foldDeltas: move ${f.getPath} -> $target failed")
-          name
-        }
-      }
-    fs.delete(tmp, true)
-    // a twin preserves its original's row order, so it inherits the
-    // original's provenance: twins of UNPROVEN files re-enter the marker
-    // (the r13-advice false-readmission hazard), twins of proven files
-    // stay proven for free
-    GraftStagingCatalog.sortOrderUnproven(fs, d).foreach { case (_, unproven) =>
-      val twins = repl.iterator.collect {
-        case (old0, news) if unproven(old0) => news
-      }.flatten.toSeq
-      GraftStagingCatalog.markUnsorted(fs, d, twins)
-    }
+    // a BORROWED file's twin materializes into the folding table's own
+    // root — never back into the source's directory
+    val repl = Staging.landTwins(fs, d, "fold", resolved, "__graft_ff", "__graft_fr",
+      covered, pathKey, inRoot = TableClone.isForeign)
     val coveredSet = covered.toSet
     val newFiles = all.flatMap(f =>
       if (coveredSet(f)) repl.getOrElse(f, Seq.empty) else Seq(f))
@@ -503,14 +455,6 @@ object StagingMaintenance {
     val df =
       if (!lineage) dvApplied
       else RowLineage.materialize(dvApplied, lineageEntries).drop("_metadata")
-    // rewrite into a staging subdir (underscore-prefixed: invisible to data
-    // listings), then move the compacted parts into the table dir under
-    // unique names BEFORE committing the manifest that references them —
-    // a crash mid-move leaves unreferenced files, never a torn version.
-    // (The moves are data-file placement, not the commit: atomicity lives
-    // entirely in the create-exclusive manifest write.)
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val tmp = new Path(d, s"_optimize_$token")
     val moved: Seq[String] = partitionBy match {
       case Some(p) =>
         // PARTITION layout: bed the current set into `<prefix>=v/`
@@ -534,40 +478,24 @@ object StagingMaintenance {
             org.apache.spark.sql.functions.pmod(col(c).cast("long"),
               org.apache.spark.sql.functions.lit(n.toLong)).cast("int")
         }
-        {
-          // SORT-ORDER PRESERVATION (r13): a declared-sort-order table's
-          // laid-out files stay per-file sorted — the invariant the scan's
-          // SupportsReportOrdering report rides (and what makes a bucket
-          // layout SMJ sort-free on top of exchange-free)
-          val so = GraftStagingCatalog.sortOrderCols(fs, d)
-            .filter(c => df.columns.exists(_.equalsIgnoreCase(c)))
-          val base0 = df.withColumn("__graft_pdir", derived)
-            .repartition(col("__graft_pdir"))
-          val laidOut =
-            if (so.isEmpty) base0
-            else base0.sortWithinPartitions(
-              (col("__graft_pdir") +: so.map(col)): _*)
-          laidOut.write.partitionBy("__graft_pdir").mode("overwrite")
-            .parquet(tmp.toString)
-        }
-        fs.listStatus(tmp).toIndexedSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("__graft_pdir="))
-          .flatMap { pd =>
-            // keep Spark's own escaped partition VALUE, swap in the spec's
-            // directory prefix
-            val dirName =
-              spec.dirPrefix + pd.getPath.getName.stripPrefix("__graft_pdir=")
-            val target = new Path(d, dirName)
-            fs.mkdirs(target)
-            fs.listStatus(pd.getPath).toIndexedSeq
-              .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-              .map { f =>
-                val t = new Path(target, s"opt-$token-${f.getPath.getName}")
-                if (!fs.rename(f.getPath, t))
-                  throw new IllegalStateException(s"optimize: move ${f.getPath} -> $t failed")
-                s"$dirName/${t.getName}"
-              }
-          }
+        // SORT-ORDER PRESERVATION (r13): a declared-sort-order table's
+        // laid-out files stay per-file sorted — the invariant the scan's
+        // SupportsReportOrdering report rides (and what makes a bucket
+        // layout SMJ sort-free on top of exchange-free)
+        val so = GraftStagingCatalog.sortOrderCols(fs, d)
+          .filter(c => df.columns.exists(_.equalsIgnoreCase(c)))
+        val base0 = df.withColumn("__graft_pdir", derived)
+          .repartition(col("__graft_pdir"))
+        val laidOut =
+          if (so.isEmpty) base0
+          else base0.sortWithinPartitions(
+            (col("__graft_pdir") +: so.map(col)): _*)
+        // keep Spark's own escaped partition VALUE, swap in the spec's
+        // directory prefix
+        Staging.landParts(fs, d, "optimize", laidOut, Some("__graft_pdir"),
+            groupDir = v => Some(spec.dirPrefix + v)) { p =>
+          s"${spec.dirPrefix}${p.group}/opt-${p.token}-${p.name}"
+        }.flatMap(_._2)
       case None =>
         val laid = clusterBy match {
           case Some(spec) if spec.contains(",") =>
@@ -615,17 +543,9 @@ object StagingMaintenance {
             else df.repartitionByRange(effTarget, so.map(col): _*)
               .sortWithinPartitions(so.map(col): _*)
         }
-        laid.write.mode("overwrite").parquet(tmp.toString)
-        fs.listStatus(tmp).toIndexedSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map { f =>
-            val target = new Path(d, s"opt-$token-${f.getPath.getName}")
-            if (!fs.rename(f.getPath, target))
-              throw new IllegalStateException(s"optimize: move ${f.getPath} -> $target failed")
-            target.getName
-          }
+        Staging.landParts(fs, d, "optimize", laid)(p => s"opt-${p.token}-${p.name}")
+          .flatMap(_._2)
     }
-    fs.delete(tmp, true)
     val v = writeExplicitManifest(fs, d, carried ++ moved, expectedBase = Some(base),
       matFiles = if (lineage) moved.toSet else Set.empty)
     // commit-time zone-map maintenance, if declared — best-effort: the
@@ -1011,10 +931,6 @@ object StagingMaintenance {
     * delete surfaces as identity-keyed deletes and a MOR UPDATE (DV-delete
     * + preserved-id insert) pairs into pre/post images off the shared id.
     */
-  /** Plan-evidence accessor for [[lineageCdfDiff]] (dev tooling only). */
-  private[catalog] def lineageDiffForPlanDump(spark: SparkSession, fs: FileSystem,
-      d: Path, v: Long): DataFrame = lineageCdfDiff(spark, fs, d, v)
-
   private def lineageCdfDiff(spark: SparkSession, fs: FileSystem, d: Path,
       v: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, not, struct}
@@ -2190,19 +2106,18 @@ object StagingMaintenance {
       drop.foreach { case (_, f) => fs.delete(f, false) }
       deadNow.foreach(f => fs.delete(new Path(d, f), false))
       deadDvs.foreach(n => fs.delete(new Path(dvDir, n), false))
-      // CRASHED-REWRITE STAGING DIRS (r12): an OPTIMIZE/DELETE that died
-      // mid-write leaves its underscore-prefixed work dir (`_optimize_*`,
-      // `_delete_*`, or the parquet committer's `_temporary`) holding up
-      // to a table's worth of bytes — invisible to data listings, so
-      // without this they leak FOREVER. Reclaim those whose ENTIRE TREE is
-      // older than `spark.graft.vacuum.temp-ttl-ms` (default 24 h).
+      // CRASHED-REWRITE STAGING DIRS (r12): a rewrite that died mid-write
+      // leaves its staging dir (`Staging.isStagingDir`) holding up to a
+      // table's worth of bytes — invisible to data listings, so without
+      // this they leak FOREVER. Reclaim those whose ENTIRE TREE is older
+      // than `spark.graft.vacuum.temp-ttl-ms` (default 24 h).
       // Liveness is judged by the max modification time ACROSS the tree,
       // not the top-level dir: a long-running committer write mutates only
       // nested `_temporary/...` task files, so the top-level mtime froze
       // at job start — an in-flight rewrite's tree always has recent
-      // leaves, a crashed one's tree is uniformly old. Only the three
-      // crash-artifact prefixes are touched — `_graft_*` sidecars and the
-      // version log never match.
+      // leaves, a crashed one's tree is uniformly old. Only the staging
+      // names are touched — `_graft_*` sidecars and the version log never
+      // match.
       val tempTtl = spark.conf.getOption("spark.graft.vacuum.temp-ttl-ms")
         .map(_.toLong).getOrElse(86400000L)
       val tempHorizon = System.currentTimeMillis() - tempTtl
@@ -2218,9 +2133,7 @@ object StagingMaintenance {
        catch { case _: FileNotFoundException => Seq.empty })
         .foreach { st =>
           val n = st.getPath.getName
-          if (st.isDirectory &&
-              (n.startsWith("_optimize_") || n.startsWith("_delete_") ||
-                n == "_temporary") &&
+          if (st.isDirectory && Staging.isStagingDir(n) &&
               (try treeMaxMtime(st.getPath) < tempHorizon
                catch { case _: FileNotFoundException => false })) {
             fs.delete(st.getPath, true); ()

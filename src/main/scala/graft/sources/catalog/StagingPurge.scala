@@ -159,11 +159,6 @@ object StagingPurge {
     val tableDirName = d.getName
     def dirKey(f: String): String =
       if (f.contains("/")) f else s"$tableDirName/$f"
-    val pidOf: Map[String, Int] = cand.zipWithIndex.map { case (f, i) =>
-      dirKey(f) -> i }.toMap
-    require(pidOf.size == cand.size,
-      s"purge: candidate dir/name keys are not unique (${cand.size} files, " +
-        s"${pidOf.size} distinct keys)")
     // rows_purged = matching rows in the LIVE faces (main head + every
     // branch head — the compliance-facing number); a logical row whose
     // history spans several rewrites lives in several candidate files, and
@@ -198,8 +193,6 @@ object StagingPurge {
           .groupBy(_.getString(0))
           .map { case (k, rs) => inv(k) -> rs.map(_.getLong(1)).sorted }
       }
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val tmp = new Path(d, s"_purge_$token")
     val survivors0 = raw.filter(not(hit))
     // ROW LINEAGE (r14): survivors land their RESOLVED id in the physical
     // column (the OPTIMIZE-fold rule) — dropping rows shifts positions,
@@ -223,51 +216,12 @@ object StagingPurge {
             coalesce(col(phys), col("__gl_base") + col("__graft_pr")))
           .drop("__gl_pf", "__gl_base")
       }
-    survivors
-      .withColumn("__graft_pid",
-        org.apache.spark.sql.functions.element_at(typedLit(pidOf), col("__graft_pf")))
-      .repartition(math.max(cand.size, 1), col("__graft_pid"))
-      .sortWithinPartitions(col("__graft_pid"), col("__graft_pr"))
-      .drop("__graft_pf", "__graft_pr")
-      .write.partitionBy("__graft_pid").mode("overwrite").parquet(tmp.toString)
-
-    // ---- place twins beside their originals (same partition directory:
-    // the path-based pruner must keep judging them by the same spec), then
-    // swap names through every manifest under the catalog monitor
-    val repl = scala.collection.mutable.Map.empty[String, Seq[String]]
-    fs.listStatus(tmp).toIndexedSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__graft_pid="))
-      .foreach { pd =>
-        val pid = pd.getPath.getName.stripPrefix("__graft_pid=").toInt
-        val old = cand(pid)
-        val slash = old.lastIndexOf('/')
-        val dirPart = if (slash > 0) old.substring(0, slash + 1) else ""
-        // part names number sequentially within the writing task (c000,
-        // c001, …) but listStatus order is unspecified — sort, or a
-        // multi-part twin's row order (and the DV ordinal remap riding
-        // twinCum) silently scrambles
-        val parts = fs.listStatus(pd.getPath).toIndexedSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        repl(old) = parts.zipWithIndex.map { case (f, j) =>
-          val name = s"${dirPart}purge-$token-$pid-$j.parquet"
-          val target = new Path(d, name)
-          if (!fs.rename(f.getPath, target))
-            throw new IllegalStateException(s"purge: move ${f.getPath} -> $target failed")
-          name
-        }
-      }
-    fs.delete(tmp, true)
-    // a twin of a sort-order-UNPROVEN file inherits its unprovenness: it
-    // preserves the original (possibly unsorted) row order under a fresh
-    // name the provenance marker doesn't know — re-mark it, or the
-    // ordering report would falsely re-admit (the exact r13-advice bug)
-    sortOrderUnproven(fs, d).foreach { case (_, unproven) =>
-      val twins = repl.iterator.collect {
-        case (old0, news) if unproven(old0) => news
-      }.flatten.toSeq
-      markUnsorted(fs, d, twins)
-    }
+    // ---- land each candidate's survivors as its twins, then swap names
+    // through every manifest under the catalog monitor. A multi-part
+    // twin keeps its row order (the DV ordinal remap riding twinCum
+    // depends on it)
+    val repl = Staging.landTwins(fs, d, "purge", survivors, "__graft_pf", "__graft_pr",
+      cand, dirKey)
     val candSet = candSet0
     val touchedManifests = GraftStagingCatalog.synchronized {
       val headNow = headManifest(fs, d).map(_._1).getOrElse(0L)

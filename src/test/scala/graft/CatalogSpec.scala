@@ -2192,24 +2192,28 @@ class CatalogSpec extends SparkSpec {
     val root = spark.conf.get("spark.sql.catalog.stage_t.root")
     val d = new org.apache.hadoop.fs.Path(s"$root/ws/vtmp")
     val hfs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    // simulate a crashed OPTIMIZE and a crashed committer
-    val crashedOpt = new org.apache.hadoop.fs.Path(d, "_optimize_deadbeef")
+    // simulate a crashed rewrite of every staging kind (OPTIMIZE, DELETE,
+    // delta fold, history purge, rename column) and a crashed committer
+    val crashed = Seq("optimize", "delete", "fold", "purge", "rename")
+      .map(k => new org.apache.hadoop.fs.Path(d, s"_${k}_deadbeef"))
     val crashedTmp = new org.apache.hadoop.fs.Path(d, "_temporary")
-    hfs.mkdirs(crashedOpt)
-    val out = hfs.create(new org.apache.hadoop.fs.Path(crashedOpt, "part-junk.parquet"))
-    out.write(Array.fill[Byte](128)(1)); out.close()
+    crashed.foreach { c =>
+      hfs.mkdirs(c)
+      val out = hfs.create(new org.apache.hadoop.fs.Path(c, "part-junk.parquet"))
+      out.write(Array.fill[Byte](128)(1)); out.close()
+    }
     hfs.mkdirs(crashedTmp)
     // with a LONG TTL the (recent) dirs look live and survive vacuum
     spark.conf.set("spark.graft.vacuum.temp-ttl-ms", "3600000")
     try {
       spark.sql("CALL stage_t.vacuum('ws', 'vtmp', 10)").collect()
-      assert(hfs.exists(crashedOpt) && hfs.exists(crashedTmp),
+      assert((crashedTmp +: crashed).forall(hfs.exists),
         "vacuum reclaimed a recent (possibly live) staging dir")
       // with TTL 0 they are crash artifacts — reclaimed
       Thread.sleep(20)
       spark.conf.set("spark.graft.vacuum.temp-ttl-ms", "0")
       spark.sql("CALL stage_t.vacuum('ws', 'vtmp', 10)").collect()
-      assert(!hfs.exists(crashedOpt), "crashed _optimize_ dir not reclaimed")
+      crashed.foreach(c => assert(!hfs.exists(c), s"crashed ${c.getName} dir not reclaimed"))
       assert(!hfs.exists(crashedTmp), "crashed _temporary dir not reclaimed")
       // the version log and sidecars are untouched; the table still reads
       assert(hfs.exists(new org.apache.hadoop.fs.Path(d, "_graft_versions")))
